@@ -50,14 +50,6 @@ from mechaml_spark.frontier.store import SnapshotStore
 
 MAX_REDIRECT = 5  # src/agent.ml:65
 
-# Lazy local checkpoints: the plan is still truncated to an RDD scan
-# at build time, but materialization folds into the next action —
-# far fewer jobs per epoch (driver planning/codegen is the superstep
-# overhead at small scale).  Flip via env for A/B.
-_EAGER = __import__("os").environ.get("MECHAML_EAGER_CKPT", "") not in (
-    "", "0", "false", "False"
-)
-
 
 def _dbg_timer():
     """Stage timer active when MECHAML_CRAWL_DEBUG=1 (stderr)."""
@@ -197,7 +189,6 @@ def crawl(
     max_transport_retries: int = 2,
     fetcher=None,
     robots_fetcher=None,
-    seen_cls: type = SeenSet,
     host_budgets: DataFrame | None = None,
 ) -> CrawlResult:
     """``corpus``/``images`` may be passed pre-materialized (cached)
@@ -210,13 +201,7 @@ def crawl(
     design point the seed list is a table, and the list path's
     driver-side canonicalize + createDataFrame (~307k rows = several
     serial seconds) never happens: canonicalization, host
-    extraction, and dedup all run distributed.
-
-    ``seen_cls`` picks the URL-seen prefilter backend (north rule:
-    "bloom/cuckoo"): :class:`SeenSet` (bloom, default) or
-    :class:`~mechaml_spark.frontier.seen.CuckooSeenSet` (deletable,
-    same sharded state shape) — crawl results are byte-equal across
-    backends (tested) because the exact table is authoritative."""
+    extraction, and dedup all run distributed."""
     from mechaml_spark import urlkit
 
     mark = _dbg_timer()
@@ -331,10 +316,13 @@ def crawl(
         frontier = dfs["frontier"]
         if "attempt" not in frontier.columns:  # pre-retry snapshots
             frontier = frontier.withColumn("attempt", F.lit(0))
-        seen = seen_cls(spark, n_shards, n_bits, dfs["seen"], dfs["bloom"])
+        seen = SeenSet(spark, n_shards, n_bits, dfs["seen"], dfs["bloom"])
         jar = dfs["jar"]
         visit_log = dfs["visit_log"]
-        pages_log = dfs["pages_log"]
+        # pages_log is derived, not stored: fetched pages + blocked rows
+        pages_log = visit_log.select(
+            "epoch", "url_norm", "status"
+        ).unionByName(dfs["blocked"])
         payload = dfs["payload"]
     else:
         if seeds_canon is not None:
@@ -356,7 +344,7 @@ def crawl(
                 ],
                 FRONTIER_T,
             )
-        seen = seen_cls(spark, n_shards, n_bits).add(frontier)
+        seen = SeenSet(spark, n_shards, n_bits).add(frontier)
         jar = ck.empty_jar(spark)
         visit_log = spark.createDataFrame([], VISIT_T)
         pages_log = spark.createDataFrame([], PAGES_T)
@@ -412,23 +400,24 @@ def crawl(
             url_col="url_norm",
             carry_cols=("host", "depth", "discovered_epoch", "attempt"),
         )
-        finals = fr.finals.localCheckpoint(eager=_EAGER)
+        # lazy local checkpoints (here and below): lineage is cut now,
+        # materialization folds into the next action — fewer jobs
+        finals = fr.finals.localCheckpoint(eager=False)
         mark(f"e{epoch} fetch+finals")
         cookie_events = fr.cookie_events
         hop_targets = fr.hop_targets
 
-        visit_log = visit_log.unionByName(
-            finals.select(
-                F.lit(epoch).alias("epoch"),
-                "depth",
-                "discovered_epoch",
-                "url_norm",
-                "final_url",
-                "status",
-            )
+        visits = finals.select(
+            F.lit(epoch).alias("epoch"),
+            "depth",
+            "discovered_epoch",
+            "url_norm",
+            "final_url",
+            "status",
         )
+        visit_log = visit_log.unionByName(visits)
         pages_log = pages_log.unionByName(
-            finals.select(F.lit(epoch).alias("epoch"), "url_norm", "status")
+            visits.select("epoch", "url_norm", "status")
         )
 
         # transport-failure retry: status 0 marks a DNS/connect/timeout
@@ -512,7 +501,7 @@ def crawl(
             F.min("depth").alias("depth"),
             F.max("is_hop").alias("is_hop"),
         )
-        probed = seen.probe_dedup_update(cand).localCheckpoint(eager=_EAGER)
+        probed = seen.probe_dedup_update(cand).localCheckpoint(eager=False)
         mark(f"e{epoch} seen.probe")
         new_bloom = probed.where(F.col("bits").isNotNull()).select(
             "host_shard", "bits"
@@ -525,9 +514,9 @@ def crawl(
             crows.where(~F.col("_maybe_seen"))
             .unionByName(verified)
             .select("url_norm", "host", "depth", "is_hop", "host_shard")
-            .localCheckpoint(eager=_EAGER)
+            .localCheckpoint(eager=False)
         )
-        seen = seen_cls(
+        seen = SeenSet(
             spark,
             n_shards,
             n_bits,
@@ -544,7 +533,7 @@ def crawl(
             F.lit(epoch).alias("discovered_epoch"),
             F.lit(0).alias("attempt"),
         )
-        frontier = frontier.unionByName(new_frontier).localCheckpoint(eager=_EAGER)
+        frontier = frontier.unionByName(new_frontier).localCheckpoint(eager=False)
         mark(f"e{epoch} frontier ckpt")
 
         # 5. payload: first-seen image ids -> join images table
@@ -588,7 +577,7 @@ def crawl(
         _trunc = (epoch + 1) % truncate_every == 0
         payload = payload.unionByName(new_payload)
         if _trunc:
-            payload = payload.localCheckpoint(eager=_EAGER)
+            payload = payload.localCheckpoint(eager=False)
         mark(f"e{epoch} payload")
 
         # 6. cookie events: parse once, ACCUMULATE with the epoch tag —
@@ -615,7 +604,7 @@ def crawl(
             else cookie_log.unionByName(parsed_cookies)
         )
         if _trunc:
-            cookie_log = cookie_log.localCheckpoint(eager=_EAGER)
+            cookie_log = cookie_log.localCheckpoint(eager=False)
         mark(f"e{epoch} jar")
         # visit_log/pages_log union chains reference only checkpointed
         # inputs (finals, frontier), so no PER-EPOCH materialization is
@@ -624,8 +613,8 @@ def crawl(
         # into the same periodic truncation cycle as payload/jar so
         # plan depth stays O(truncate_every) at any crawl length
         if _trunc:
-            visit_log = visit_log.localCheckpoint(eager=_EAGER)
-            pages_log = pages_log.localCheckpoint(eager=_EAGER)
+            visit_log = visit_log.localCheckpoint(eager=False)
+            pages_log = pages_log.localCheckpoint(eager=False)
 
         if store is not None:
             # delta-only metrics update: new_seen is the epoch's small
@@ -645,16 +634,20 @@ def crawl(
             frontier_pq = frontier.repartition(
                 n_shards, host_shard_col(F.col("host"), n_shards)
             ).sortWithinPartitions("depth", "discovered_epoch", "url_norm")
+            # live state is replaced; the logs, seen set and payload are
+            # appended as this epoch's delta only (store.APPENDED).  At
+            # epoch 0 the whole seen table (seeds + discoveries) is new.
             store.commit(
                 epoch,
                 {
                     "frontier": frontier_pq,
-                    "seen": seen.seen_df,
                     "bloom": seen.bloom_df,
                     "jar": ck.fold_cookie_events(jar, cookie_log),
-                    "visit_log": visit_log,
-                    "pages_log": pages_log,
-                    "payload": payload,
+                    "seen": seen.seen_df if epoch == 0
+                    else new_seen.select("url_norm", "host_shard"),
+                    "visit_log": visits,
+                    "blocked": blocked,
+                    "payload": new_payload,
                 },
                 metrics={
                     "frontier_epoch": epoch,

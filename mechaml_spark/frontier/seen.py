@@ -436,10 +436,10 @@ class CuckooSeenSet:
     filter — at ~95% achievable load factor and comparable FPR
     (4 slots x 16-bit fp ≈ 2^-13 per probe).
 
-    Constructor signature matches ``SeenSet`` so the crawl scheduler's
-    ``seen_cls`` switch and snapshot resume (``type(seen)(...)``) work
-    unchanged; ``n_bits`` is interpreted as the state-byte budget of
-    the equivalent bloom (see ``_cuckoo_layout``).
+    Constructor signature matches ``SeenSet`` (same sharded state
+    shape, so the two are interchangeable over a seen table); ``n_bits``
+    is interpreted as the state-byte budget of the equivalent bloom
+    (see ``_cuckoo_layout``).
     """
 
     def __init__(

@@ -1165,8 +1165,10 @@ def tiff_decode(data: bytes) -> np.ndarray:
     cnts = cnts if isinstance(cnts, list) else [cnts]
     # Per-strip inflation cap: RowsPerStrip * stride (padded last strip
     # allowed).  Bounds every unpacker's output so a 1-KB bomb strip
-    # cannot allocate past the (already pixel-gated) image size.
-    rps = int(ifd.get(278, h) or h)
+    # cannot allocate past the (already pixel-gated) image size; the
+    # tag is clamped to the height (single-strip files often declare
+    # 2^32-1).
+    rps = min(int(ifd.get(278, h) or h), h)
     strip_cap = max(1, rps) * max(1, w * spp)
     raw = b"".join(
         unpackers[comp](data[o : o + c], strip_cap)

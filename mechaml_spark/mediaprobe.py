@@ -1008,10 +1008,11 @@ def mkv_write_clusters(
                         # signed vint, 2-byte form: value + (2^13 - 1);
                         # a delta outside the form's range would corrupt
                         # the marker bit silently — fail loudly instead
-                        assert -0x1FFF <= delta <= 0x1FFF, (
-                            f"EBML lace delta {delta} exceeds the 2-byte "
-                            "signed-vint range"
-                        )
+                        if not -0x1FFF <= delta <= 0x1FFF:
+                            raise ValueError(
+                                f"EBML lace delta {delta} exceeds the "
+                                "2-byte signed-vint range"
+                            )
                         head += (0x4000 | (delta + 0x1FFF)).to_bytes(
                             2, "big"
                         )

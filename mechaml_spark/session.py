@@ -15,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of ``MemAvailable`` (``/proc/meminfo``), capped at 16g: a
+    heap sized past free memory gets the JVM OOM-killed mid-job."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration):
+        return "16g"
+    return f"{min(16 << 10, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "mechaml_spark",
     master: str | None = None,
@@ -39,7 +53,10 @@ def get_spark(
         # Crawl ingestion decodes UNTRUSTED bytes: charset errors must
         # replace (U+FFFD), never fail the task (sniff.decode_text).
         .config("spark.sql.legacy.codingErrorAction", "true")
-        .config("spark.driver.memory", os.environ.get("MECHAML_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("MECHAML_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import pathlib
 
 import pytest
@@ -11,8 +12,9 @@ FIXTURE = pathlib.Path(__file__).parent / "fixtures" / "index.html"
 def spark():
     from mechaml_spark.session import get_spark
 
-    s = get_spark(app_name="mechaml_spark_tests", master="local[8]",
-                  shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    s = get_spark(app_name="mechaml_spark_tests", master=f"local[{cpus}]",
+                  shuffle_partitions=cpus)
     yield s
     s.stop()
 

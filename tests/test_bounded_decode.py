@@ -168,6 +168,21 @@ def test_tiff_deflate_bomb_strip_rejected():
     assert took < 1.0
 
 
+def test_tiff_rows_per_strip_clamped_to_height():
+    # the same bomb strip, but RowsPerStrip declared as 0xFFFFFFFF: the
+    # per-strip cap must come from the image height, not the tag
+    px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
+    good = tiff_encode(px, compression=8)
+    good_strip = zlib.compress(px.reshape(4, 12).tobytes(), 6)
+    bomb = zlib.compress(b"\x00" * (32 << 20), 9)
+    data = bytearray(good[: -len(good_strip)] + bomb)
+    for tag, val in ((279, len(bomb)), (278, 0xFFFFFFFF)):
+        i = data.index(struct.pack("<HHI", tag, 4, 1))
+        data[i + 8 : i + 12] = struct.pack("<I", val)
+    took = _timed(lambda: imaging.tiff_decode(bytes(data)))
+    assert took < 1.0
+
+
 def test_tiff_dimension_bomb_rejected_fast():
     px = np.zeros((2, 2, 3), np.uint8)
     data = bytearray(tiff_encode(px))

@@ -633,3 +633,13 @@ def test_ebml_single_frame_lacing_has_no_size_fields():
         == b"Q" * 20
     assert data[rows[1]["offset"]:rows[1]["offset"] + rows[1]["size"]] \
         == b"R" * 9
+
+
+def test_ebml_lace_delta_out_of_range_raises_value_error():
+    """The 2-byte signed-vint range guard is a ValueError, not an
+    assert, so it still fires under ``python -O``."""
+    with pytest.raises(ValueError, match="lace delta"):
+        mp.mkv_write_clusters([(0, [
+            {"track": 1, "rel_tc": 0, "keyframe": True,
+             "lacing": ("ebml", [b"a", b"b" * 0x3000, b"c"])},
+        ])])

@@ -2,19 +2,14 @@
 
 Covers: pure-numpy filter mechanics (insert/probe/delete, eviction
 chains, multiset collision safety, overflow), Spark-level equivalence
-with the bloom backend, deletion re-admission, overflow exactness,
-and byte-equal crawl parity under ``seen_cls=CuckooSeenSet``.
+with the bloom backend, deletion re-admission and overflow exactness.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from mechaml_spark import corpus as cp
-from mechaml_spark.frontier.oracle import crawl_oracle
-from mechaml_spark.frontier.scheduler import crawl
 from mechaml_spark.frontier.seen import (
     CUCKOO_SLOTS,
     CuckooSeenSet,
@@ -129,35 +124,3 @@ def test_overflow_stays_exact_spark(spark):
     want = sorted(r["url_norm"] for r in _urls(spark, 6000, 6200).collect())
     assert got == want
 
-
-# ------------------------------------------------------------- crawl parity
-SPEC = cp.CorpusSpec(n_hosts=3, pages_per_host=8)
-SEEDS = [cp.page_url(SPEC, 0, 0), cp.page_url(SPEC, 1, 3)]
-
-
-def _visit_list(res):
-    rows = res.visit_log.orderBy(
-        "epoch", "depth", "discovered_epoch", "url_norm"
-    ).collect()
-    return [
-        (r["epoch"], r["depth"], r["discovered_epoch"], r["url_norm"],
-         r["final_url"], r["status"])
-        for r in rows
-    ]
-
-
-@pytest.mark.timeout(600)
-def test_crawl_parity_cuckoo_backend(spark):
-    """Same crawl, cuckoo seen-set: byte-equal visit order + seen
-    membership vs the sequential oracle (hence vs the bloom backend,
-    which equals the same oracle in test_crawl)."""
-    res = crawl(
-        spark, SPEC, SEEDS, budget_per_host=2, max_epochs=4,
-        n_shards=4, n_bits=1 << 16, seen_cls=CuckooSeenSet,
-    )
-    want = crawl_oracle(SPEC, SEEDS, budget_per_host=2, max_epochs=4)
-    assert _visit_list(res) == want.visit_log
-    got_seen = {
-        r["url_norm"] for r in res.seen.seen_df.select("url_norm").collect()
-    }
-    assert got_seen == want.seen
